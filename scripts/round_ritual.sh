@@ -10,13 +10,10 @@
 #      silently wrong results don't fail a bench; r12 caught 3 this way),
 #      plus 27x full, the 81x overflow spot set, and the zipf-skew spot
 #      set (salted join/groupBy families hash-exact on a hot-key corpus)
-#   5. bench sf0.1                    (committed as BENCH_r{N}_sf01.json)
-#   6. 9x scale bench + linearity     (committed as BENCH_r{N}_sf1.json +
-#                                      LINEARITY_r{N}.txt)
-#   7. 27x bench on the top slow queries + two-point growth-exponent fit
-#      (committed as GROWTH_r{N}.txt — one scale point cannot tell linear
-#      from quadratic-with-small-coefficient)
-#   8. FINAL GATE: refuse to bless a dirty or unre-tested tree. The tree
+#   5. benchmark smoke                (perfbench/run.py --smoke: all three
+#                                      workloads on sf0.001, every answer
+#                                      checked against DuckDB)
+#   6. FINAL GATE: refuse to bless a dirty or unre-tested tree. The tree
 #      must be committed (git status clean), and if HEAD moved or the tree
 #      was dirty when step 1 ran, the full test suite re-runs against HEAD
 #      (r13 shipped red because a post-ritual source commit skipped this).
@@ -28,7 +25,7 @@
 #   sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.01 /root/repo/testdata_docskew9x 9 --docskew"
 #   sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.01 /root/repo/testdata_docskew27x 27 --docskew"
 # Usage: scripts/round_ritual.sh [fast] [roundN]
-#   "fast" skips steps 4-7; roundN (e.g. 13) names the committed artifacts.
+#   "fast" skips steps 4-5; roundN (e.g. 13) names the committed artifacts.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 FAST="${1:-}"
@@ -45,17 +42,17 @@ gate() { # gate <label>: mark the round failed
 # battery green under strict, so any strict trip is a regression).
 export GRAFT_STRICT_ORDER=1
 
-# Snapshot the tree identity step 1 tests, so step 8 can tell whether the
+# Snapshot the tree identity step 1 tests, so step 6 can tell whether the
 # suite that passed is the suite at HEAD.
 START_HEAD=$(git rev-parse HEAD)
 START_DIRTY=$(git status --porcelain | wc -l)
 
-step "1/8 sbt test (strict order)"
+step "1/6 sbt test (strict order)"
 out=$(sbt -batch test 2>&1 | grep -E "Tests:|All tests" | tail -2)
 echo "$out"
 echo "$out" | grep -q "failed 0" || gate "sbt test"
 
-step "2/8 extended sweep (1200 seeds, strict order)"
+step "2/6 extended sweep (1200 seeds, strict order)"
 out=$(GRAFT_SWEEP=1 sbt -batch "testOnly graft.ExtendedSweepSpec" 2>&1 |
   grep -E "seeds|Tests:" | tail -3)
 echo "$out"
@@ -88,11 +85,11 @@ assert_cap_branch() {
   fi
 }
 
-step "3/8 oracle correctness sf0.01"
+step "3/6 oracle correctness sf0.01"
 run_verify /root/testdata/sf0.01 /tmp/ritual_v001 "oracle sf0.01"
 
 if [ "$FAST" != "fast" ]; then
-  step "4/8 oracle correctness sf0.1 + 9x + 27x"
+  step "4/6 oracle correctness sf0.1 + 9x + 27x"
   SPARK_GRAFT_CPUS=16 run_verify /root/testdata/sf0.1 /tmp/ritual_v01 \
     "oracle sf0.1"
   if [ -d /root/repo/testdata_sf1 ]; then
@@ -221,12 +218,12 @@ q_dedup_minhash,q_substring_dup"
     echo "testdata_docskew9x missing — run ScaleUp --docskew first"
     gate "oracle docskew spot (no data)"
   fi
-  # docskew 27x SCALE leg (r17, r16 directive 5): the adaptive recovery's
-  # materialization costs (posting + cold-pair checkpoints, the recovery
-  # joins) only show at volume — oracle the dedup family on the cap-firing
-  # corpus at 27 copies AND record its bench time. Base stays sf0.01: the
-  # DuckDB oracle replays the shingle join UNCAPPED, and per-copy token
-  # salting keeps each copy's hot posting (250 docs) enumerable.
+  # docskew 27x SCALE leg (r17, r16 directive 5): the adaptive recovery
+  # (posting + cold-pair checkpoints, the recovery joins) must stay exact
+  # at volume — oracle the dedup family on the cap-firing corpus at 27
+  # copies. Base stays sf0.01: the DuckDB oracle replays the shingle join
+  # UNCAPPED, and per-copy token salting keeps each copy's hot posting
+  # (250 docs) enumerable.
   if [ -d /root/repo/testdata_docskew27x ]; then
     probe=$(sbt -batch "runMain graft.tools.DocSkewProbe /root/repo/testdata_docskew27x" 2>/dev/null |
       grep "docskew-probe" || true)
@@ -248,20 +245,6 @@ q_dedup_minhash,q_substring_dup"
       else
         gate "oracle docskew27x spot"
       fi
-      rm -f /tmp/ritual_bench_docskew27x.json
-      SPARK_GRAFT_SF_DIR=/root/repo/testdata_docskew27x \
-        SPARK_GRAFT_ONLY="$DOCSKEW_SET" \
-        SPARK_GRAFT_BENCH_OUT=/tmp/ritual_bench_docskew27x.json \
-        sbt -batch "runMain graft.Bench" >/dev/null 2>&1 || true
-      python3 - <<'PY' || gate "docskew27x bench"
-import json, sys
-d = json.load(open('/tmp/ritual_bench_docskew27x.json'))
-print('docskew27x bench total', d['value'], 'failed', d['failed'])
-sys.exit(1 if d['failed'] else 0)
-PY
-      [ -n "$ROUND" ] && [ -f /tmp/ritual_bench_docskew27x.json ] &&
-        cp /tmp/ritual_bench_docskew27x.json \
-          "BENCH_r${ROUND}_docskew27x.json"
     else
       gate "oracle docskew27x spot (Verify crashed)"
     fi
@@ -270,157 +253,22 @@ PY
     gate "oracle docskew27x spot (no data)"
   fi
 
-  step "5/8 bench sf0.1"
-  # stale-artifact guard (r14 advice): every bench invocation below is
-  # `|| true`, so a crashed run must be detected as MISSING output — a
-  # leftover artifact from a previous round would otherwise pass the
-  # failed-queries check and feed prior-round timings into the fit
-  rm -f /tmp/ritual_bench_sf01.json /tmp/ritual_bench_sf1.json \
-    /tmp/ritual_bench_27x.json /tmp/ritual_bench_81x.json
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-    SPARK_GRAFT_BENCH_OUT=/tmp/ritual_bench_sf01.json \
-    sbt -batch "runMain graft.Bench" >/dev/null 2>&1 || true
-  python3 - <<'PY' || gate "bench sf0.1"
-import json, sys
-d = json.load(open('/tmp/ritual_bench_sf01.json'))
-print('total', d['value'], 'failed', d['failed'])
-sys.exit(1 if d['failed'] else 0)
-PY
-  [ -n "$ROUND" ] && cp /tmp/ritual_bench_sf01.json \
-    "BENCH_r${ROUND}_sf01.json"
-
-  step "6/8 9x bench + linearity"
-  if [ -d /root/repo/testdata_sf1 ]; then
-    SPARK_GRAFT_SF_DIR=/root/repo/testdata_sf1 \
-      SPARK_GRAFT_BENCH_OUT=/tmp/ritual_bench_sf1.json \
-      sbt -batch "runMain graft.Bench" >/dev/null 2>&1 || true
-    # a query failing ONLY at 9x is exactly what this step exists to
-    # catch — gate the artifact's failed list before the ratio check
-    python3 - <<'PY' || gate "9x bench (failed queries)"
-import json, sys
-d = json.load(open('/tmp/ritual_bench_sf1.json'))
-print('9x total', d['value'], 'failed', d['failed'])
-sys.exit(1 if d['failed'] else 0)
-PY
-    [ -n "$ROUND" ] && cp /tmp/ritual_bench_sf1.json \
-      "BENCH_r${ROUND}_sf1.json"
-    if python3 scripts/linearity.py /tmp/ritual_bench_sf01.json \
-         /tmp/ritual_bench_sf1.json 9 > /tmp/ritual_linearity.txt; then
-      tail -2 /tmp/ritual_linearity.txt
-      tail -1 /tmp/ritual_linearity.txt |
-        grep -Eq "; 0/[0-9]+ queries over" ||
-        gate "linearity (super-linear queries)"
-    else
-      tail -2 /tmp/ritual_linearity.txt
-      gate "linearity (unparseable bench artifacts)"
-    fi
-    [ -n "$ROUND" ] && cp /tmp/ritual_linearity.txt "LINEARITY_r${ROUND}.txt"
-  else
-    echo "testdata_sf1 missing — run graft.tools.ScaleUp first"
-    gate "9x bench (no data)"
-  fi
-
-  step "7/8 27x + 81x bench (top slow queries) + growth-exponent fit"
-  if [ -d /root/repo/testdata_27x ] && [ -f /tmp/ritual_bench_sf1.json ]; then
-    TOP=$(python3 - <<'PY'
-import json
-d = json.load(open('/tmp/ritual_bench_sf1.json'))
-qs = sorted(d['queries'].items(), key=lambda kv: -kv[1])[:20]
-print(','.join(q for q, _ in qs))
-PY
-)
-    SPARK_GRAFT_SF_DIR=/root/repo/testdata_27x SPARK_GRAFT_ONLY="$TOP" \
-      SPARK_GRAFT_BENCH_OUT=/tmp/ritual_bench_27x.json \
-      sbt -batch "runMain graft.Bench" >/dev/null 2>&1 || true
-    python3 - <<'PY' || gate "27x bench (failed queries)"
-import json, sys
-d = json.load(open('/tmp/ritual_bench_27x.json'))
-print('27x total (top-20)', d['value'], 'failed', d['failed'])
-sys.exit(1 if d['failed'] else 0)
-PY
-    [ -n "$ROUND" ] && cp /tmp/ritual_bench_27x.json \
-      "BENCH_r${ROUND}_27x.json"
-    # 81x: a FOURTH growth point for the top-10 heaviest queries — the
-    # tail slope 27x->81x is the closest the harness gets to the 100 TB
-    # asymptote (fixed costs are fully amortized). THREE reps, not two:
-    # with two, Bench's median degenerates to the max, and single-rep
-    # outliers at 81x measure 1.6-2.6x on identical code (r16: sink
-    # [255.2, 96.1] in one session) — a fit fed by maxima flags noise,
-    # not growth. Median-of-3 rejects one outlier per query.
-    GROWTH_POINTS="1:/tmp/ritual_bench_sf01.json 9:/tmp/ritual_bench_sf1.json 27:/tmp/ritual_bench_27x.json"
-    if [ -d /root/repo/testdata_81x ]; then
-      TOP10=$(python3 - <<'PY'
-import json
-d = json.load(open('/tmp/ritual_bench_sf1.json'))
-qs = sorted(d['queries'].items(), key=lambda kv: -kv[1])[:10]
-print(','.join(q for q, _ in qs))
-PY
-)
-      SPARK_GRAFT_SF_DIR=/root/repo/testdata_81x SPARK_GRAFT_ONLY="$TOP10" \
-        SPARK_GRAFT_REPS=3 \
-        SPARK_GRAFT_BENCH_OUT=/tmp/ritual_bench_81x.json \
-        sbt -batch "runMain graft.Bench" >/dev/null 2>&1 || true
-      if python3 - <<'PY'
-import json, sys
-d = json.load(open('/tmp/ritual_bench_81x.json'))
-print('81x total (top-10)', d['value'], 'failed', d['failed'])
-sys.exit(1 if d['failed'] else 0)
-PY
-      then
-        GROWTH_POINTS="$GROWTH_POINTS 81:/tmp/ritual_bench_81x.json"
-        [ -n "$ROUND" ] && cp /tmp/ritual_bench_81x.json \
-          "BENCH_r${ROUND}_81x.json"
-      else
-        gate "81x bench (failed queries)"
-      fi
-    else
-      echo "testdata_81x missing — 81x growth point skipped"
-      gate "81x growth point (no data)"
-    fi
-    if python3 scripts/growth_fit.py --points $GROWTH_POINTS 1.2 \
-         > /tmp/ritual_growth.txt; then
-      tail -3 /tmp/ritual_growth.txt
-    else
-      tail -5 /tmp/ritual_growth.txt
-      gate "growth fit (super-linear exponent)"
-    fi
-    [ -n "$ROUND" ] && cp /tmp/ritual_growth.txt "GROWTH_r${ROUND}.txt"
-    # per-stage attribution data for the doc-heavy tail (r16, r15
-    # directive 7): the next tail flag must arrive with its cpu/run, GC,
-    # spill, and per-stage execution attribution already committed —
-    # symptom AND evidence in one artifact.
-    # r18 (r17 verdict directives 1/6/7): q_salted_join joins the set (the
-    # third still-superlinear query AdaptiveParts targets), q_substring_dup
-    # (heaviest untouched linear query — needs attributed stages before any
-    # change), q_bpe_encode (the per-round training caches must be shown to
-    # spill or not at 81x, not extrapolated from sf0.1).
-    METRICS_SET="q_pipeline_sink,q_pipeline_clean,q_pipeline_full,\
-q_dedup_clusters,q_dedup_ngram_jaccard,q_salted_join,q_substring_dup,\
-q_bpe_encode"
-    : > /tmp/ritual_metrics.txt
-    for SCALE_DIR in /root/repo/testdata_27x /root/repo/testdata_81x; do
-      [ -d "$SCALE_DIR" ] || continue
-      sbt -batch "runMain graft.tools.StageMetrics $METRICS_SET $SCALE_DIR" \
-        2>/dev/null | grep -Ev "^\[info\]|^\[warn\]|^\[success" \
-        >> /tmp/ritual_metrics.txt ||
-        gate "stage metrics ($SCALE_DIR)"
-    done
-    grep -c "stage-metrics" /tmp/ritual_metrics.txt | sed 's/^/metrics queries captured: /'
-    [ -n "$ROUND" ] && cp /tmp/ritual_metrics.txt "METRICS_r${ROUND}.txt"
-  else
-    echo "testdata_27x missing — run graft.tools.ScaleUp first"
-    gate "27x bench (no data)"
-  fi
+  step "5/6 benchmark smoke"
+  # builds the engine and the perfbench harness from this checkout and
+  # runs serve_point, analytic_batch and ivm_loop on sf0.001, checking
+  # every response against DuckDB
+  python3 perfbench/run.py --workload all --smoke 2>&1 | tail -5
+  [ "${PIPESTATUS[0]}" -eq 0 ] || gate "benchmark smoke"
 fi
 
-step "8/8 final gate (clean tree, tests ran against HEAD)"
+step "6/6 final gate (clean tree, tests ran against HEAD)"
 END_HEAD=$(git rev-parse HEAD)
-# With ROUND set, steps 4-7 write the round's own artifacts into the
+# With ROUND set, step 4 writes the round's own artifacts into the
 # tree — expected output, not dirt, or a full run could never exit 0.
 # Everything ELSE still gates; the caller's next act must be the
 # blessing commit that adds exactly these files.
 ARTIFACT_RE='^zzz-no-artifacts$'
-[ -n "$ROUND" ] && ARTIFACT_RE="(CORRECTNESS_r${ROUND}_(27x|skew|docskew|docskew27x|81x)\.json|BENCH_r${ROUND}_(sf01|sf1|27x|81x|docskew27x)\.json|LINEARITY_r${ROUND}\.txt|GROWTH_r${ROUND}\.txt|METRICS_r${ROUND}\.txt)$"
+[ -n "$ROUND" ] && ARTIFACT_RE="CORRECTNESS_r${ROUND}_(27x|skew|docskew|docskew27x|81x)\.json$"
 # Only UNTRACKED ('??') round artifacts are exempt dirt: a MODIFIED
 # round artifact means committed evidence no longer matches this run
 # (a post-blessing re-run overwrote blessed numbers) and must gate

@@ -7,7 +7,7 @@ import graft.core.GraftQuery
 object SparkEntry {
 
   /** Every module contributes GraftQuery entries (Spark plan + oracle SQL). */
-  def allQueries: Seq[GraftQuery] =
+  lazy val allQueries: Seq[GraftQuery] =
     operators.Relational.queries ++
       operators.Indexes.queries ++
       operators.Scalars.queries ++
@@ -43,11 +43,11 @@ object SparkEntry {
     operators.Relational.flagship(spark)
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     allQueries.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted entries → rows-only check. */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     allQueries.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -10,12 +10,10 @@ object Verify {
     val spark = graft.core.ScaleConf.tuned(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (same contract as Bench): SPARK_GRAFT_ONLY=q_a,q_b
+    // local-iteration filter: SPARK_GRAFT_ONLY=q_a,q_b
     // dumps a subset; the driver never sets it, so driver runs dump everything
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)

@@ -2,56 +2,19 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** OPT-IN session settings that make post-shuffle partitioning track
-  * MEASURED shuffle size instead of a static knob. Default OFF
-  * (`GRAFT_SCALECONF=on` enables them): measured under bench conditions
-  * they are a net REGRESSION at this harness's largest corpus, and the
-  * honest fix for the spill they targeted lives in the operators
-  * themselves (hash-build gate joins — see `operators/PipelineFull`).
+/** The session settings every graft session needs, whoever builds it
+  * (servers, `Verify`, tools, tests): all graft mains route their builder
+  * through [[tuned]].
   *
-  * History, because both halves are instructive:
+  *  - `spark.sql.session.timeZone=UTC`: `Tables.load("events")` refuses
+  *    any other zone, because the events timestamps and their oracle SQL
+  *    are defined in UTC.
+  *  - `spark.ui.enabled=false`: no web UI threads or port per session.
   *
-  * The r15 growth fit flagged e_tail 1.27–1.35 on five doc-heavy queries
-  * at 27x→81x. `tools/StageMetrics` attributed the bend to sort-spill
-  * onset in the pipelines' gate-join seal stages (at 81x/stock:
-  * 532M+297M and 448M+26M of spill in `q_pipeline_sink`'s two heaviest
-  * seal stages) — post-shuffle partition count is frozen at
-  * `spark.sql.shuffle.partitions` (AQE coalescing can only MERGE map
-  * buckets), so partitions grow linearly with the corpus until sort
-  * buffers spill. These settings (high `initialPartitionNum`, a 16 MB
-  * advisory sized for ~8x row expansion, AQE re-sizing of cached plans,
-  * a 64 KB coalesce floor) did eliminate that spill — and a single-query
-  * cold run improved (143.5 s → 91.7 s on `q_pipeline_sink` at 81x).
-  *
-  * But the bench-conditions A/B (five-query warmed session, median of
-  * reps, r16) REFUTED them as a default: q_pipeline_sink 81x = 75.1 s
-  * stock vs 255.2 s with these settings (111–135 s even benched alone);
-  * q_pipeline_full 68.7 s vs 190.2 s. Per-stage metrics show why: the
-  * many-small-partition plans do ~1.7x the task CPU (47-task stages
-  * re-paying per-task broadcast/codegen/init costs and churning the
-  * block store with 10x the seal blocks), which costs more than the
-  * ~800 MB of sort spill they avoid. Avoiding the spill is still right —
-  * but the scale-robust way is to not SORT fat rows at all (shuffle-hash
-  * gate joins, `PipelineFull`), not to multiply partition counts.
-  *
-  * Kept as an opt-in so the A/B stays reproducible
-  * (`GRAFT_SCALECONF=on`), and because on a REAL multi-executor cluster
-  * — where per-task init amortizes across executor-local tasks and the
-  * block store is not one shared 8g heap — the measured tradeoff could
-  * flip; that re-measurement is exactly what the flag is for.
+  * Everything else stays at Spark's defaults.
   */
 object ScaleConf {
-  val settings: Seq[(String, String)] = Seq(
-    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "512",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m",
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k")
-
-  /** Apply to a builder (all graft mains route through this). Stock
-    * Spark defaults unless `GRAFT_SCALECONF=on` opts in (see class doc:
-    * the opt-in lost the bench-conditions A/B at 81x). */
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
-    if (sys.env.get("GRAFT_SCALECONF").contains("on"))
-      settings.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
-    else b
+    b.config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
 }

@@ -40,8 +40,8 @@ object Tables {
       // reader unless surfaced as epoch-nanos longs (no-op for µs files).
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Event-time derivations (the NTZ→LTZ cast in tsCol, date_trunc /
-      // window bucketing) must agree with the UTC DuckDB oracle. Every
-      // graft-owned builder pins spark.sql.session.timeZone=UTC; a session
+      // window bucketing) must agree with the UTC DuckDB oracle.
+      // ScaleConf.tuned pins spark.sql.session.timeZone=UTC; a session
       // that arrives here non-UTC is misconfigured, and silently flipping
       // its zone mid-session would corrupt any intentional setting — fail
       // loudly instead.
@@ -52,8 +52,8 @@ object Tables {
       require(isUtc,
         s"events requires spark.sql.session.timeZone=UTC (found '$tz'): " +
           "event-time derivations must agree with the UTC DuckDB oracle. " +
-          "Pin .config(\"spark.sql.session.timeZone\", \"UTC\") in the " +
-          "SparkSession builder (all graft mains already do)")
+          "Build the session through graft.core.ScaleConf.tuned, which " +
+          "pins it (all graft mains do)")
       val df = spark.read.parquet(s"$dir/$name.parquet")
       assertEventsTs(df.schema("ts").dataType)
       df

@@ -563,7 +563,7 @@ object Dedup {
       // The r17 shape computed the window stream twice — the dup
       // aggregate scanned+exploded the corpus on its own subtree, then
       // BROADCAST the full duplicated-window string set so the join-back
-      // side could avoid a second g-shuffle (27x StageMetrics: 25s + 14s
+      // side could avoid a second g-shuffle (27x stage metrics: 25s + 14s
       // task CPU for the two builds of the same windows; the broadcast
       // is also corpus-growing — a memory hazard no real cluster should
       // carry). Repartitioning the exploded stream by g ONCE lets the

@@ -184,8 +184,6 @@ object Graph {
       // compresses (mutates values) and must not race a live iterator
       val nodes = parent.keys.toArray
       val out = nodes.map(v => (v, find(v))).toSeq
-      if (sys.env.get("GRAFT_CC_STATS").contains("1")) System.err.println(
-        s"[graft-cc] edges=$nEdges path=local-union-find")
       return spark.createDataset(out).toDF("node", "component")
     }
     // distributed label propagation: ~1M edges per partition keeps tasks
@@ -212,15 +210,8 @@ object Graph {
     var prevSum = -1L
     var iter = 0
     var done = false
-    // GRAFT_CC_STATS=1: per-round wall breakdown (propagate+jump vs
-    // checksum vs confirm join) to stderr — the r15 verdict's audit ask.
-    // The row count per round rides the checksum job's input, so stats
-    // mode adds NO extra Spark jobs.
-    val ccStats = sys.env.get("GRAFT_CC_STATS").contains("1")
-    var wallProp = 0L; var wallSum = 0L; var wallConfirm = 0L
     while (!done && iter < maxIter) {
       iter += 1
-      val t0 = System.nanoTime()
       // neighbor labels flow along edges; min with the node's own label
       val prop = edges.join(labels, $"src" === $"node")
         .select($"dst".as("node"), $"label")
@@ -237,29 +228,17 @@ object Graph {
         .select($"node", least($"label", $"jl").as("label"))
         .localCheckpoint()
       stepped.unpersist()
-      val t1 = System.nanoTime()
       val s = checksum(next)
-      val t2 = System.nanoTime()
       if (s == prevSum) {
         // confirm exactly — the checksum is a filter, not the proof
         done = next.join(labels.select($"node".as("n2"), $"label".as("l2")),
           $"node" === $"n2").filter($"label" =!= $"l2").isEmpty
       }
-      val t3 = System.nanoTime()
-      wallProp += t1 - t0; wallSum += t2 - t1; wallConfirm += t3 - t2
-      if (ccStats) System.err.println(
-        f"[graft-cc] round=$iter prop=${(t1 - t0) / 1e9}%.2fs " +
-          f"checksum=${(t2 - t1) / 1e9}%.2fs " +
-          f"confirm=${(t3 - t2) / 1e9}%.2fs done=$done")
       prevSum = s
       labels = next
     }
     edges.unpersist()
     edgesRaw.unpersist()
-    System.err.println(
-      f"[graft-cc] edges=$nEdges path=distributed rounds=$iter parts=$parts " +
-        f"prop=${wallProp / 1e9}%.1fs checksum=${wallSum / 1e9}%.1fs " +
-        f"confirm=${wallConfirm / 1e9}%.1fs")
     labels.select($"node", $"label".as("component"))
   }
 }

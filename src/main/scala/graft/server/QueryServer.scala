@@ -2,7 +2,7 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
+import java.util.concurrent.{ExecutorService, Executors}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -31,6 +31,7 @@ final class QueryServer(spark: SparkSession, dataDir: String,
     port: Int = 8080, maxRows: Int = 10000, host: String = "127.0.0.1") {
 
   private var server: HttpServer = _
+  private var pool: ExecutorService = _
 
   /** Bind and start; returns the actual port (pass port=0 for ephemeral).
     * Binds loopback by default — POST /run executes arbitrary programs, so
@@ -39,14 +40,20 @@ final class QueryServer(spark: SparkSession, dataDir: String,
   def start(): Int = {
     server = HttpServer.create(new InetSocketAddress(host, port), 0)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    pool = Executors.newFixedThreadPool(4)
+    server.setExecutor(pool)
     server.start()
     boundPort
   }
 
   def boundPort: Int = server.getAddress.getPort
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Stop accepting requests and release the handler threads, so a JVM
+    * that stops its server can exit. */
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    if (pool != null) pool.shutdown()
+  }
 
   private def handle(ex: HttpExchange): Unit =
     try {
@@ -205,8 +212,6 @@ object QueryServerMain {
     val spark = graft.core.ScaleConf.tuned(SparkSession.builder()
       .appName("graft-server").master("local[*]")
       .config("spark.sql.shuffle.partitions", 32))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
       .getOrCreate()
     val server = new QueryServer(spark, dataDir, port)
     val bound = server.start()

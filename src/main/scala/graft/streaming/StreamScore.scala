@@ -62,7 +62,7 @@ object StreamScore {
       // run the stream, then DETACH the (small, per-document) result from
       // the memory sink with an eager localCheckpoint so the sink table and
       // the watch directory can be cleaned up immediately — repeated
-      // Verify/Bench reps must not accumulate temp dirs or session tables
+      // runs of this query must not accumulate temp dirs or session tables
       val fromSink =
         try {
           StreamConf.withStatePartitions(s, 2) {

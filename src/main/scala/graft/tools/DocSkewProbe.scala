@@ -16,8 +16,6 @@ object DocSkewProbe {
     val spark = graft.core.ScaleConf.tuned(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
       .config("spark.sql.shuffle.partitions", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val cap = graft.operators.Dedup.maxShingleDocFreq

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Dev harness: materialize a larger scale factor from `/root/testdata`'s
   * largest driver-generated SF by replicating fact tables `copies`× with
-  * disjoint id ranges — the sf1 input for the scale-linearity bench run
-  * (round-12 validation: measure, don't argue, the 10× story).
+  * disjoint id ranges — the 9x/27x/81x corpora the ritual's scale
+  * oracle gates run `Verify` on (correctness at scale: a query can fail
+  * or overflow only past some size).
   *
   * Faithful to TPC-H scaling: `region`/`nation` are FIXED dimensions
   * (constant at every SF) and copy through unshifted; every fact table's
@@ -64,14 +65,12 @@ object ScaleUp {
     // stride 10^12 with ≤81 copies tops out at 8.1×10^13 — five decimal
     // orders under int64 for any INDIVIDUAL id. SUMS of shifted ids grow
     // ~quadratically in copies and are exactly what the 81× corpus exists
-    // to stress (r14 overflow audit: the harness's third growth point and
+    // to stress (r14 overflow audit: the harness's largest corpus and
     // the empirical net under the oracle-sum bound sweep).
     require(copies >= 1 && copies <= 81, "copies in 1..81 (id stride headroom)")
-    val spark = SparkSession.builder()
+    val spark = graft.core.ScaleConf.tuned(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "32"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val stride = 1000000000000L // > every sf0.1 id range; 9x fits int64

@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * jsrc distinct-outer broadcast race, the zip distinct-outer shuffle)
   * found only by eyeballing bench artifacts. This spec runs the whole
   * correlated-aggregate family (and the two previously-flaky queries'
-  * fixed forms) twice each under Bench's per-rep hygiene and asserts the
-  * job count is identical across reps — a raced stage materialization
-  * shows up as a count delta here, in CI, not in a committed artifact
-  * three rounds later.
+  * fixed forms) twice each under Verify's per-query cache hygiene and
+  * asserts the job count is identical across reps — a raced stage
+  * materialization shows up as a count delta here, in CI, not in a
+  * committed artifact three rounds later.
   */
 class JobCountSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -26,9 +26,6 @@ class JobCountSpec extends AnyFunSuite {
       })
   }
 
-  /** One measured execution with Bench.runOnce's cache hygiene, so rep 2
-    * pays the same plan cost as rep 1 (a cached relation or leftover
-    * index would fake determinism by eliding jobs). */
   /** Wait until the (async) listener bus stops delivering JobStarts —
     * stable for 300ms, bounded at 15s. JobStart posts at submission,
     * strictly before the action unblocks, so this only absorbs residual
@@ -44,6 +41,9 @@ class JobCountSpec extends AnyFunSuite {
     }
   }
 
+  /** One measured execution with Verify's per-query cache hygiene, so
+    * rep 2 pays the same plan cost as rep 1 (a cached relation or
+    * leftover index would fake determinism by eliding jobs). */
   private def jobsOf(name: String): Int = {
     listenerInstalled
     val before = spark.sparkContext.getPersistentRDDs.keySet

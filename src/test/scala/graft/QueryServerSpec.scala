@@ -180,4 +180,24 @@ class QueryServerSpec extends AnyFunSuite {
       assert(get(s"http://localhost:$port/get_artist_less_than/xyz")._1 === 404)
     }
   }
+
+  test("stop() releases the handler threads so the JVM can exit") {
+    // warm the session first: threads Spark starts lazily on its first
+    // job belong to the session, not to the server
+    spark.range(1).count()
+    def liveNonDaemon(): Set[Thread] = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala
+        .filter(t => t.isAlive && !t.isDaemon).toSet
+    }
+    val before = liveNonDaemon()
+    val srv = new QueryServer(spark, TestSpark.sfDir, port = 0)
+    val port = srv.start()
+    assert(get(s"http://localhost:$port/get_artist_less_than/4")._1 === 200)
+    srv.stop()
+    val started = liveNonDaemon() -- before
+    started.foreach(_.join(5000))
+    val left = started.filter(_.isAlive)
+    assert(left.isEmpty, left.map(_.getName).mkString(", "))
+  }
 }

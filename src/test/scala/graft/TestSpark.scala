@@ -7,10 +7,8 @@ object TestSpark {
   lazy val spark: SparkSession = {
     val s = graft.core.ScaleConf.tuned(SparkSession.builder()
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse"))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
